@@ -12,6 +12,7 @@ Usage: python scripts/capture_plans.py
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -32,6 +33,51 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+# output schemas (column names) of the two Python kernels of the KG chain
+TAGGING_KERNEL = ("url", "sent_idx", "sent", "words", "span_arr", "tags", "mentions")
+ER_SIGNATURE_KERNEL = ("node_id", "etype", "shs", "band_0", "band_1", "band_2")
+
+
+def map_in_pandas_kernels(plan: str) -> dict[tuple[str, ...], set[str]]:
+    """Distinct MapInPandas nodes of formatted plans, grouped by output
+    schema. A node is its output attribute list with expression ids, so
+    the copies of one node (AQE's initial and final plan, a cached
+    relation printed under every scan of it) count once."""
+
+    out: dict[tuple[str, ...], set[str]] = {}
+    for attrs in re.findall(
+        r"^\(\d+\) MapInPandas\nInput[^\n]*\nArguments: [^\n]*?, \[([^\]]*)\], (?:true|false)$",
+        plan, re.M,
+    ):
+        out.setdefault(tuple(a.split("#")[0] for a in attrs.split(", ")), set()).add(attrs)
+    return out
+
+
+def uncached_nodes(df, node: str) -> int:
+    """Nodes named ``node`` in ``df``'s optimized logical plan. A cached
+    subtree is an InMemoryRelation leaf there, so these are the nodes the
+    action runs instead of reading them from a cached relation."""
+    stack, n = [df._jdf.queryExecution().optimizedPlan()], 0  # noqa: SLF001
+    while stack:
+        plan = stack.pop()
+        n += plan.nodeName() == node
+        children = plan.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+def sql_execution_plans(spark) -> dict[int, str]:
+    """Physical plan of every SQL execution the session has run so far,
+    by execution id, from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()  # noqa: SLF001
+    plans = {}
+    while it.hasNext():
+        e = it.next()
+        plans[e.executionId()] = e.physicalPlanDescription()
+    return plans
 
 
 def main() -> None:
@@ -82,8 +128,6 @@ def main() -> None:
     # based BroadcastExchange at sf0.01 is fine: the bucket table really is
     # small here, and the same cost model picks a shuffle join when the
     # estimate crosses the threshold at scale.
-    import re
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     lsh = dedup.lsh_bucket_pairs(docs)
     p4 = plan_of(lsh)
@@ -133,24 +177,29 @@ def main() -> None:
     # pass feeds both the triple flattening and the ER occurrence chain —
     # the round-2 version ran the corpus twice (production chain + a second
     # relational typing pass). In the final plan every branch reads the
-    # persisted tagged table (InMemoryTableScan); at most one MapInPandas
-    # may appear where the explain expands the cached relation's definition.
+    # persisted tagged table (InMemoryTableScan). The ER signature kernel
+    # runs in the eager connected-components jobs of the build, so its
+    # node is read from those executions' plans in the SQL status store.
     from unsupervised_ner_spark.caching import cache_scope
 
+    before = sql_execution_plans(spark)
     with cache_scope():
         q7 = entry.q_kg_canonical_triples(spark, SF)
         p7 = plan_of(q7)
         sections.append(("North-rule end table (kg_canonical_triples), single derivation", p7))
-        # the cached relation's defining plan is re-printed under every
-        # InMemoryTableScan reference, so count DISTINCT MapInPandas node
-        # ids — exactly one means exactly one tagging stage in the query
-        mip_ids = set(re.findall(r"MapInPandas(?: |\s*\()(\d+)\)?", p7))
-        # two distinct kernels since the round-6 fuzzy-edge signature
-        # fusion: the tagging kernel and the ER signature kernel — each
-        # runs ONCE; branches read the cached tagged table
-        checks.append(("tagging + ER signature kernels each planned once: "
-                       "branches read the cached tagged table",
-                       "InMemoryTableScan" in p7 and len(mip_ids) <= 2))
+        built = [p7, *(v for k, v in sql_execution_plans(spark).items() if k not in before)]
+        kernels = map_in_pandas_kernels("\n".join(built))
+        # exactly one node each, the same node in every plan that shows it
+        # (a cached relation's definition is re-printed under each scan)
+        checks.append(("tagging kernel planned exactly once: branches read "
+                       "the cached tagged table",
+                       len(kernels.get(TAGGING_KERNEL, ())) == 1
+                       and set(map_in_pandas_kernels(p7)) == {TAGGING_KERNEL}
+                       and uncached_nodes(q7, "MapInPandas") == 0))
+        checks.append(("ER signature kernel planned exactly once in the build",
+                       len(kernels.get(ER_SIGNATURE_KERNEL, ())) == 1))
+        checks.append(("no MapInPandas besides the tagging and ER signature kernels",
+                       set(kernels) == {TAGGING_KERNEL, ER_SIGNATURE_KERNEL}))
         checks.append(("salted subj/obj membership joins",
                        "ssalt" in p7 and "osalt" in p7))
         checks.append(("CC labels materialized (lineage cut): ExistingRDD scan",

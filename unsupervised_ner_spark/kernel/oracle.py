@@ -68,22 +68,30 @@ class OracleTagger:
         suppress_untagged: bool = True,
         punct_terminate: bool = True,
         typing_version: str = "v2",
+        term_table: dict | None = None,
     ):
         """``typing_version``: "v2" (batched semantics — softmax-weighted,
         the parity oracle) or "v1" (per-mention main_NER semantics —
         count-fraction weighting + subtype occurrence counting; see
-        kernel/typing.py:aggregate_entities_v1)."""
-        assert typing_version in ("v1", "v2")
+        kernel/typing.py:aggregate_entities_v1).
+
+        ``term_table``: the per-descriptor-term typing table to fill and
+        read. Taggers built on the same signatures and entity map with the
+        same ``suppress_untagged`` and ``typing_version`` may share one."""
         self.provider = provider
         self.entity_map = entity_map
         self.signatures = signatures
         self.common_descs = common_descs
         self.suppress_untagged = suppress_untagged
         self.punct_terminate = punct_terminate
-        self.typing_version = typing_version
+        self._entry = T.DESCRIPTOR_ENTRY[typing_version]
+        # lower-cased descriptor term -> typing entry (typing.py module
+        # docstring); bounded by the descriptor vocabulary and valid for
+        # every provider, so context-sensitive ones benefit too
+        self._terms: dict = {} if term_table is None else term_table
         # typing-result memo: valid only when the provider declares its
-        # descriptors a pure function of the surface (cache_key != None).
-        # Zipfian surface distributions make this the tagging hot-path win.
+        # descriptors a pure function of the surface (cache_key != None);
+        # a hit skips the descriptor fetch, typing and pooling of a mention
         self._memo: dict = {}
 
     def _signature(self, desc: str):
@@ -95,13 +103,16 @@ class OracleTagger:
         return (list(sig[0]), list(sig[1]))
 
     def _type_side(self, descs):
-        sigs = [self._signature(d) for d, _ in descs]
-        fn = (
-            T.aggregate_entities
-            if self.typing_version == "v2"
-            else T.aggregate_entities_v1
-        )
-        return fn(descs, sigs, self.entity_map, self.suppress_untagged)
+        terms = self._terms
+        entries = []
+        for desc, _ in descs:
+            entry = terms.get(desc.lower())
+            if entry is None:
+                entry = terms[desc.lower()] = self._entry(
+                    *self._signature(desc), self.entity_map, self.suppress_untagged
+                )
+            entries.append(entry)
+        return T.aggregate_entries(entries, [float(score) for _, score in descs])
 
     def tag_sentence(self, text: str) -> SentenceResult:
         sent = add_term_punct(text) if self.punct_terminate else text

@@ -1,15 +1,17 @@
-"""Entity-typing math kernel (v2 "batched" semantics).
+"""Entity-typing math kernel (v2 "batched" semantics, plus v1).
 
 From-scratch re-expression of the reference's typing math; every step cites
 the behavior it replicates in ``/root/reference/batched_main_NER.py``:
 
 - ``softmax``                      :27-30   (max-subtracted, axis=0)
-- ``aggregate_entities``           :602-657 (per-descriptor softmax of label
-                                             counts, weighted by MLM score,
-                                             summed per consolidated group)
-- ``map_entities``                 :686-702 (subtype accumulation w/ raw counts)
-- ``sort_subtypes``                :660-665
-- ``update_entities_with_subtypes``:667-678 ("GROUP[sub1,sub2,...]")
+- ``descriptor_entry``             :602-632,:686-702 (one descriptor's
+                                             consolidated subtype counts and
+                                             softmax of its label counts)
+- ``aggregate_entries``            :632-678 (score-weighted sum per group,
+                                             sort_subtypes :660-665,
+                                             update_entities_with_subtypes
+                                             :667-678 "GROUP[sub1,...]")
+- ``aggregate_entities``           :602-657 (the composition of the two)
 - ``convert_positive_nums_to_dist``:579-590 (normalize, np.round 4dp,
                                              zero-sum -> first factor 1)
 - ``skip_untagged``                :680-683
@@ -17,10 +19,24 @@ the behavior it replicates in ``/root/reference/batched_main_NER.py``:
                                              CI skip :158-173)
 - ``fill_detected_entities``       :457-467 (argmax type + top subtype)
 
+Per-term / per-mention split: everything ``descriptor_entry`` (and its v1
+counterpart ``descriptor_entry_v1``) computes depends only on the
+descriptor TERM's signature, the entity map and ``suppress_untagged`` —
+not on the mention or the MLM score. ``OracleTagger`` therefore keeps one
+entry per lower-cased descriptor term in a table (the key its signature
+lookup uses) and runs only ``aggregate_entries`` per mention. The table is
+bounded by the descriptor vocabulary: the a100 fixture emits 14,961
+distinct terms (its 14,951 signature terms plus the OOV and numeric
+stand-ins); a BERT wordpiece vocabulary has about 30k.
+``aggregate_entities`` and ``aggregate_entities_v1`` are exactly
+entry-then-aggregate, so cached and uncached typing are one implementation
+with bit-identical floats.
+
 Deliberately preserved quirks:
 - the dead ``curr_counts_sum`` variable (:622-623) is NOT replicated — only
   the live accumulation path (:628-632) is.
-- normalization uses numpy round (banker's rounding), same as the reference.
+- normalization rounds like numpy (banker's rounding), same as the
+  reference; ``_round4`` is np.round(x, 4) bit for bit without the array.
 
 Deliberate DIVERGENCE (documented): the reference breaks sort ties by dict
 insertion order (Python's ``sorted`` is stable, :636,:663). Insertion order
@@ -44,12 +60,27 @@ from unsupervised_ner_spark.kernel.constants import (
 Descs = list[tuple[str, float]]            # [(desc_term, mlm_score), ...] rank order
 Signature = tuple[list[str], list[int]]    # (labels, cluster_counts), parallel
 Dist = list[tuple[str, float]]             # [(entity, confidence), ...] sorted desc
+# per-term typing entry: ((group, label, count) subtype increments,
+#                         (group, weight) pairs), see descriptor_entry
+Entry = tuple[tuple[tuple[str, str, int], ...], tuple[tuple[str, float], ...]]
 
 
 def softmax(x: np.ndarray) -> np.ndarray:
     """Max-subtracted softmax (batched_main_NER.py:27-30)."""
     e_x = np.exp(x - np.max(x))
     return e_x / e_x.sum(axis=0)
+
+
+def _round4(x: float) -> float:
+    """``np.round(x, 4)`` on one float: numpy computes rint(x * 1e4) / 1e4,
+    and Python's ``round`` is the same half-to-even rint. A zero result
+    keeps the sign of ``x``, and inf/nan pass through, as with rint."""
+    y = x * 10000.0
+    try:
+        r = round(y)
+    except (OverflowError, ValueError):
+        return y / 10000.0
+    return r / 10000.0 if r else x * 0.0
 
 
 def normalize_round(values: list[float]) -> list[float]:
@@ -64,15 +95,109 @@ def normalize_round(values: list[float]) -> list[float]:
     factors = [float(v) for v in values]
     total = float(sum(factors))
     if total == 0:
-        total = 1
-        factors[0] = 1
-    arr = np.array(factors) / total
-    return [float(v) for v in np.round(arr, 4)]
+        total = 1.0
+        factors[0] = 1.0
+    return [_round4(f / total) for f in factors]
 
 
 def skip_untagged(label: str, suppress_untagged: bool) -> bool:
     """batched_main_NER.py:680-683."""
     return suppress_untagged and label in (OTHER_LABEL, UNTAGGED_LABEL)
+
+
+def descriptor_entry(
+    labels, counts, entity_map: dict[str, str], suppress_untagged: bool = True,
+) -> Entry:
+    """Per-term part of v2 typing for one descriptor's signature.
+
+    map_entities (:686-702): skip suppressed labels, map the rest to their
+    group; each kept label adds its RAW count to its group's subtypes. The
+    kept counts are softmaxed (:602-632) and every kept group that is not
+    itself suppressed gets its softmax weight. Empty when every label is
+    suppressed."""
+    subs = tuple(
+        (entity_map[label], label, int(count))
+        for label, count in zip(labels, counts)
+        if not skip_untagged(label, suppress_untagged)
+    )
+    if not subs:
+        return (), ()
+    soft = softmax(np.array([c for _, _, c in subs], dtype=np.float64))
+    weights = tuple(
+        (group, float(w))
+        for (group, _, _), w in zip(subs, soft)
+        if not skip_untagged(group, suppress_untagged)
+    )
+    return subs, weights
+
+
+def descriptor_entry_v1(
+    labels, counts, entity_map: dict[str, str], suppress_untagged: bool = True,
+) -> Entry:
+    """Per-term part of v1 (per-mention, main_NER.py) typing:
+
+    - COUNT-FRACTION weighting (main_NER.py:541-572): kept label j weighs
+      count[j] / sum(ALL counts) — the denominator includes SUPPRESSED
+      labels' counts (:558 sums curr_counts before filtering);
+    - PRESERVED QUIRK (:560-566): after map_entities drops suppressed
+      labels, the weight lookup indexes counts by the FILTERED position
+      (``curr_counts[j]`` for filtered ``curr_e[j]``), so when a suppressed
+      label precedes a kept one the kept label gets the SUPPRESSED label's
+      count. Replicated bit-for-bit; do not "fix".
+    - subtype OCCURRENCE counting (:632): each descriptor contributes 1 per
+      subtype (not its cluster count) — "to avoid cluster context
+      overwhelming the current sentence context"."""
+    subs = tuple(
+        (entity_map[label], label, 1)
+        for label in labels
+        if not skip_untagged(label, suppress_untagged)
+    )
+    total = sum(int(c) for c in counts)  # ALL counts, pre-filter (:558)
+    total = 1 if total == 0 else total
+    # QUIRK: counts indexed by filtered position j (:560-566)
+    weights = tuple(
+        (group, float(counts[j]) / total) for j, (group, _, _) in enumerate(subs)
+    )
+    return subs, weights
+
+
+DESCRIPTOR_ENTRY = {"v1": descriptor_entry_v1, "v2": descriptor_entry}
+
+
+def aggregate_entries(entries: list[Entry], scores: list[float]):
+    """Per-mention part: descriptor i adds its subtype increments and
+    weight[j] * score[i] per group, in rank order; then sort, normalize
+    and decorate.
+
+    Returns (decorated_entities, confidences, subtypes) where
+    decorated_entities are "GROUP[sub1,sub2,...]" strings sorted by pooled
+    score desc, confidences the normalized rounded distribution, and
+    subtypes the {group: {subtype: count}} map.
+    """
+    agg: dict[str, float] = {}
+    subtypes: dict[str, dict[str, int]] = {}
+    for (subs, weights), score in zip(entries, scores):
+        for group, label, n in subs:
+            sub = subtypes.setdefault(group, {})
+            sub[label] = sub.get(label, 0) + n
+        for group, w in weights:
+            agg[group] = agg.get(group, 0.0) + w * score
+    # sort by value desc, group asc on ties (SQL-twin tie-break; see module
+    # docstring for the deliberate divergence from :636 insertion order)
+    ordered = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
+    if not ordered:  # all terms suppressed (:637-639, v1 :570-572)
+        ordered = [(OTHER_LABEL, 1.0)]
+        subtypes[OTHER_LABEL] = {OTHER_LABEL: 1}
+    confidences = normalize_round([v for _, v in ordered])
+    # sort_subtypes (:660-665) + update_entities_with_subtypes (:667-678)
+    decorated = []
+    for g, _ in ordered:
+        if g in subtypes:
+            ranked = sorted(subtypes[g].items(), key=lambda kv: (-kv[1], kv[0]))
+            decorated.append(g + "[" + ",".join(s for s, _ in ranked) + "]")
+        else:
+            decorated.append(g)
+    return decorated, confidences, subtypes
 
 
 def aggregate_entities(
@@ -81,59 +206,15 @@ def aggregate_entities(
     entity_map: dict[str, str],
     suppress_untagged: bool = True,
 ):
-    """Per-mention, per-side (CI or CS) signature aggregation.
-
-    For descriptor i with signature (labels, counts): map each label through
-    the consolidation map, drop suppressed ones, softmax the surviving counts,
-    then add softmax_count[j] * desc_score[i] into the group accumulator
-    (batched_main_NER.py:602-657). Subtypes accumulate RAW counts across
-    descriptors (:694-701).
-
-    Returns (decorated_entities, confidences, subtypes) where
-    decorated_entities are "GROUP[sub1,sub2,...]" strings sorted by pooled
-    score desc (ties: first-encountered), confidences the normalized rounded
-    distribution, and subtypes the raw {group: {subtype: count}} map.
-    """
+    """Per-mention, per-side (CI or CS) v2 signature aggregation
+    (batched_main_NER.py:602-657): ``descriptor_entry`` per descriptor,
+    composed by ``aggregate_entries`` with the MLM scores."""
     assert len(descs) == len(signatures)
-    agg: dict[str, float] = {}
-    subtypes: dict[str, dict[str, int]] = {}
-    for (_desc, score), (labels, counts) in zip(descs, signatures):
-        # map_entities (:686-702): skip suppressed subtype labels, map to
-        # group, accumulate raw counts into the subtype dict
-        trunc_groups: list[str] = []
-        trunc_counts: list[int] = []
-        for label, count in zip(labels, counts):
-            if skip_untagged(label, suppress_untagged):
-                continue
-            group = entity_map[label]
-            trunc_groups.append(group)
-            trunc_counts.append(int(count))
-            sub = subtypes.setdefault(group, {})
-            sub[label] = sub.get(label, 0) + int(count)
-        if not trunc_groups:
-            continue
-        soft = softmax(np.array(trunc_counts, dtype=np.float64))
-        for j, group in enumerate(trunc_groups):
-            if skip_untagged(group, suppress_untagged):
-                continue
-            agg[group] = agg.get(group, 0.0) + float(soft[j]) * float(score)
-    # sort by value desc, group asc on ties (SQL-twin tie-break; see module
-    # docstring for the deliberate divergence from :636 insertion order)
-    ordered = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
-    if not ordered:  # all terms suppressed (:637-639)
-        ordered = [(OTHER_LABEL, 1.0)]
-        subtypes[OTHER_LABEL] = {OTHER_LABEL: 1}
-    confidences = normalize_round([v for _, v in ordered])
-    groups = [g for g, _ in ordered]
-    # sort_subtypes (:660-665) + update_entities_with_subtypes (:667-678)
-    decorated = []
-    for g in groups:
-        if g in subtypes:
-            subs = sorted(subtypes[g].items(), key=lambda kv: (-kv[1], kv[0]))
-            decorated.append(g + "[" + ",".join(s for s, _ in subs) + "]")
-        else:
-            decorated.append(g)
-    return decorated, confidences, subtypes
+    return aggregate_entries(
+        [descriptor_entry(labels, counts, entity_map, suppress_untagged)
+         for labels, counts in signatures],
+        [float(score) for _, score in descs],
+    )
 
 
 def aggregate_entities_v1(
@@ -142,57 +223,16 @@ def aggregate_entities_v1(
     entity_map: dict[str, str],
     suppress_untagged: bool = True,
 ):
-    """v1 (per-mention, main_NER.py) aggregation semantics — the alternative
-    to the v2 softmax path for users replaying v1 outputs:
-
-    - COUNT-FRACTION weighting (main_NER.py:541-572): descriptor i's label j
-      contributes (count[j] / sum(ALL counts of descriptor i)) * desc_score_i
-      — the denominator includes SUPPRESSED labels' counts (:558 sums
-      curr_counts before filtering);
-    - PRESERVED QUIRK (:560-566): after map_entities drops suppressed
-      labels, the weight lookup indexes counts by the FILTERED position
-      (``curr_counts[j]`` for filtered ``curr_e[j]``), so when a suppressed
-      label precedes a kept one the kept label gets the SUPPRESSED label's
-      count. Replicated bit-for-bit; do not "fix".
-    - subtype OCCURRENCE counting (:632): each descriptor contributes 1 per
-      subtype (not its cluster count) — "to avoid cluster context
-      overwhelming the current sentence context".
-
-    Returns (decorated_entities, confidences, subtypes) like
-    ``aggregate_entities`` (v2); ties break (score DESC, label ASC) per the
-    module-wide cross-engine rule.
-    """
+    """v1 (per-mention, main_NER.py) aggregation — the alternative to the v2
+    softmax path for users replaying v1 outputs: ``descriptor_entry_v1`` per
+    descriptor, composed by ``aggregate_entries``, so descriptor i's label
+    j contributes (count[j] / total) * desc_score_i."""
     assert len(descs) == len(signatures)
-    agg: dict[str, float] = {}
-    subtypes: dict[str, dict[str, int]] = {}
-    for (_desc, score), (labels, counts) in zip(descs, signatures):
-        kept_groups: list[str] = []
-        for label in labels:  # map_entities (:619-637), occurrence counting
-            if skip_untagged(label, suppress_untagged):
-                continue
-            group = entity_map[label]
-            kept_groups.append(group)
-            sub = subtypes.setdefault(group, {})
-            sub[label] = sub.get(label, 0) + 1
-        total = sum(int(c) for c in counts)  # ALL counts, pre-filter (:558)
-        total = 1 if total == 0 else total
-        for j, group in enumerate(kept_groups):
-            # QUIRK: counts indexed by filtered position j (:560-566)
-            w = (float(counts[j]) / total) * float(score)
-            agg[group] = agg.get(group, 0.0) + w
-    ordered = sorted(agg.items(), key=lambda kv: (-kv[1], kv[0]))
-    if not ordered:  # all labels suppressed (:570-572)
-        ordered = [(OTHER_LABEL, 1.0)]
-        subtypes[OTHER_LABEL] = {OTHER_LABEL: 1}
-    confidences = normalize_round([v for _, v in ordered])
-    decorated = []
-    for g, _ in ordered:
-        if g in subtypes:
-            subs = sorted(subtypes[g].items(), key=lambda kv: (-kv[1], kv[0]))
-            decorated.append(g + "[" + ",".join(s for s, _ in subs) + "]")
-        else:
-            decorated.append(g)
-    return decorated, confidences, subtypes
+    return aggregate_entries(
+        [descriptor_entry_v1(labels, counts, entity_map, suppress_untagged)
+         for labels, counts in signatures],
+        [float(score) for _, score in descs],
+    )
 
 
 def pool_confidences(

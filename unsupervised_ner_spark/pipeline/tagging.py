@@ -104,6 +104,16 @@ TAGGED_SCHEMA_SLIM = _tagged_schema(MENTION_SLIM)
 # moral equivalent of the reference's lazy singleton model server
 # (BatchedNerServer.py:27-29).
 _WORKER_TAGGER_CACHE: dict = {}
+# Worker-process-level per-descriptor-term typing tables (kernel/typing.py
+# module docstring). Entries depend only on the signatures, the entity map,
+# suppress_untagged and typing_version, so every tagger of a worker shares
+# one table per key — including the per-task taggers of a provider_factory
+# run, which would otherwise start cold in every task.
+_WORKER_TERM_TABLES: dict = {}
+
+
+def _worker_term_table(model: str, suppress_untagged: bool, typing_version: str) -> dict:
+    return _WORKER_TERM_TABLES.setdefault((model, suppress_untagged, typing_version), {})
 
 
 def _worker_tagger(
@@ -133,6 +143,7 @@ def _worker_tagger(
             suppress_untagged=suppress_untagged,
             punct_terminate=False,
             typing_version=typing_version,
+            term_table=_worker_term_table(model, suppress_untagged, typing_version),
         )
     return _WORKER_TAGGER_CACHE[key]
 
@@ -163,6 +174,7 @@ def tag_sentences(
                 suppress_untagged=suppress_untagged,
                 punct_terminate=False,
                 typing_version=typing_version,
+                term_table=_worker_term_table(model, suppress_untagged, typing_version),
             )
         else:
             tagger = _worker_tagger(model, suppress_untagged, common_descs, typing_version)
